@@ -9,8 +9,10 @@ filters early so they appear in PushedFilters.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -174,6 +176,44 @@ def fast_row_count(df: DataFrame) -> int:
         return df.count()
 
 
+# confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# (path, inference confs) -> (file identity, inferred schema). The file is
+# stat'ed before inference, so a concurrent rewrite can only cause a miss;
+# two threads that miss together both infer and store the same value.
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark infers for the single parquet file `path`, memoized.
+
+    Inference launches a footer-reading job per read
+    (SchemaMergeUtils.mergeSchemasInParallel); passing the schema back with
+    `spark.read.schema(...)` skips it. The memo holds while the file keeps
+    its identity (size, mtime_ns, inode) and the inference confs keep their
+    values. Returns None for anything but a local regular file (directories,
+    remote schemes): those keep Spark's own inference."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    ident = (st.st_size, st.st_mtime_ns, st.st_ino)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (ident, schema)
+    return schema
+
+
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}")
@@ -182,4 +222,7 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)

@@ -150,10 +150,15 @@ SOURCE_SQL = """
 # --------------------------------------------------------------------------
 
 def gains_table(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    """Small dimension table (n_ant × n_chan rows) — always broadcast."""
-    ant = spark.range(N_ANT).select(F.col("id").cast("int").alias("antenna"))
-    chan = spark.range(N_CHAN_BASE - 1).select(F.col("id").cast("int").alias("chan"))
-    g = ant.crossJoin(chan)
+    """Small dimension table (n_ant × n_chan rows) — always broadcast.
+
+    Built from one range with the channel axis exploded in place: a
+    range × range crossJoin would plan a BroadcastNestedLoopJoin, whose
+    extra broadcast stage every gains consumer would pay."""
+    g = spark.range(N_ANT).select(
+        F.col("id").cast("int").alias("antenna"),
+        F.explode(F.sequence(F.lit(0), F.lit(N_CHAN_BASE - 2))).alias("chan"),
+    )
     phase = (F.col("antenna") * 7 + F.col("chan")) * F.lit(0.05)
     phase_y = phase + F.lit(0.1)
     amp = F.lit(1.0) + F.col("antenna") / F.lit(50.0) + F.col("chan") / F.lit(100.0)

@@ -4,6 +4,7 @@ bit-for-bit — this is the foundation of every oracle in __spark_entry__.py."""
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from codex_africanus_spark.sources import tpch_ms
 
@@ -39,7 +40,13 @@ def test_frame_parity(spark, sf_dir, builder, sql, key):
 
 
 def test_gains_parity(spark, sf_dir):
-    compare(tpch_ms.gains_table(spark), duck(sf_dir), tpch_ms.GAINS_SQL, ["antenna", "chan"])
+    gains = tpch_ms.gains_table(spark)
+    compare(gains, duck(sf_dir), tpch_ms.GAINS_SQL, ["antenna", "chan"])
+    # the keys are non-null: consumers' join and filter plans depend on it
+    key = [StructField(c, IntegerType(), False) for c in ("antenna", "chan")]
+    values = [StructField(c, DoubleType(), True)
+              for c in ("gain_re", "gain_im", "gain_y_re", "gain_y_im")]
+    assert gains.schema == StructType(key + values)
 
 
 def test_antenna_parity(spark, sf_dir):
