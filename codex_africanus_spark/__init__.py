@@ -9,8 +9,18 @@ reductions, cf. /root/reference/africanus/rime/dask_predict.py:64-369).
 Pandas UDFs (Arrow-batched) are used only where semantics genuinely cannot
 be expressed relationally (data-dependent sequential binning, gather-heavy
 interpolation, iterative per-group fits).
+
+Importing the package imports no pyspark: the Python worker daemon
+(`worker_daemon`) runs inside it and must fix the import path first.
+`get_spark` loads on first access.
 """
 
 __version__ = "0.1.0"
 
-from codex_africanus_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name):
+    if name == "get_spark":
+        from codex_africanus_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -189,6 +189,14 @@ def _publish(tmp: Path, final: Path) -> bool:
         tmp.unlink(missing_ok=True)
 
 
+def _write_checkpoint(root: str, version: int, cp: dict) -> None:
+    """Stage a checkpoint and link it into place, so a concurrent reader
+    never sees it half written."""
+    tmp = _log_dir(root) / f".tmp-{uuid.uuid4().hex}"
+    tmp.write_text(json.dumps(cp))
+    _publish(tmp, _checkpoint_path(root, version))
+
+
 def commit(
     df: DataFrame,
     root: str,
@@ -249,7 +257,7 @@ def commit(
                     # manifest-pruned log (checkpoint-bounds contract)
                     "delete_files": snapshot_delete_files(root, version),
                 }
-                _checkpoint_path(root, version).write_text(json.dumps(cp))
+                _write_checkpoint(root, version, cp)
             return version
     raise SnapshotConflictError(f"gave up after {max_retries} commit races")
 
@@ -1038,7 +1046,7 @@ def _commit_manifest(
             "files": snapshot_files(root, version),
             "delete_files": snapshot_delete_files(root, version),
         }
-        _checkpoint_path(root, version).write_text(json.dumps(cp))
+        _write_checkpoint(root, version, cp)
     return version
 
 
