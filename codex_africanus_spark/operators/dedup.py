@@ -11,8 +11,10 @@ Four tiers, cheapest-first (the standard web-scale dedup ladder):
 4. **n-gram Jaccard** — exact verification of candidate pairs.
 
 Everything is built from engine-portable primitives (md5-derived integer
-hashes, functions/text.py), so every tier is exactly DuckDB-oracle-checkable
-— no Python in the hot path, all JVM expressions.
+hashes, functions/text.py), so every tier is exactly DuckDB-oracle-checkable.
+The word-3-gram shingler and MinHash signatures run as mapInArrow kernels
+that are bit-identical to those JVM expressions (see _shingle_tier); every
+other step is JVM expressions.
 
 Scale notes: signatures are k min-aggregations over an exploded shingle
 frame — one shuffle keyed by doc_id (or none if docs are already
@@ -52,88 +54,90 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def _arrow_shingle_ok(docs: DataFrame) -> bool:
-    """Dispatch gate for the Arrow shingler (r14, guide §4.2): the JVM
-    path stays authoritative unless the frame matches the corpus
-    contract (bigint doc_id + string text) AND the corpus is big enough
-    to amortize the Python boundary's fixed per-stage latency —
-    measured: the kernel is 1.31x/1.13x on minhash-LSH/prefix-filter at
-    sf10 (59 MB corpus) but 0.8x on the 0.6 MB sf0.1 corpus, where the
-    shingle CPU is smaller than the worker round-trip. Size-adaptive
-    like tables.fan_out (sum of input file sizes; unknown lineage means
-    small/test frames, which stay JVM). SPARK_GRAFT_ARROW_SHINGLE=0
-    forces the JVM path, =1 forces the Arrow tier (the bit-compare
-    tests use it); SPARK_GRAFT_ARROW_SHINGLE_MIN_MB tunes the
-    crossover (default 32)."""
+def _shingle_tier(docs: DataFrame) -> tuple[str, str]:
+    """The shingler's one dispatch point: ("arrow" | "jvm", reason).
+
+    The Arrow kernels (_md5_shingler) are the default at every corpus
+    size: with the engine's worker daemon they beat the JVM codegen
+    chain (split/slice/concat_ws/md5/conv) from the sf0.01 corpus up —
+    1.1-2.2x warm on the sf0.1 shingle consumers, and a fifth less
+    session CPU on a cold pass. The JVM tier keeps three callers:
+    SPARK_GRAFT_ARROW_SHINGLE=0 (the kill-switch), frames outside the
+    corpus contract (doc_id bigint, text string), and streaming frames
+    (streaming/lsh.py's stream side, unmeasured on the Arrow tier)."""
     import os
 
+    if os.environ.get("SPARK_GRAFT_ARROW_SHINGLE") == "0":
+        return "jvm", "SPARK_GRAFT_ARROW_SHINGLE=0"
+    if docs.isStreaming:
+        return "jvm", "streaming frame"
     d = dict(docs.dtypes)
     if d.get("doc_id") != "bigint" or d.get("text") != "string":
-        return False
-    mode = os.environ.get("SPARK_GRAFT_ARROW_SHINGLE", "")
-    if mode == "0":
-        return False
-    if mode == "1":
-        return True
-    min_bytes = int(os.environ.get("SPARK_GRAFT_ARROW_SHINGLE_MIN_MB", "32")) << 20
-    try:
-        files = [f[len("file:"):] if f.startswith("file:") else f
-                 for f in docs.inputFiles()]
-        return (
-            bool(files)
-            and all(os.path.exists(p) for p in files)
-            and sum(os.path.getsize(p) for p in files) >= min_bytes
-        )
-    except Exception:
-        return False
+        return "jvm", f"doc_id {d.get('doc_id')}, text {d.get('text')}"
+    return "arrow", "doc_id bigint, text string"
+
+
+def _md5_shingler():
+    """The Arrow kernels' shared core, built per call so cloudpickle ships
+    it by value (workers of a caller-built session cannot import this
+    package). shingle(texts) -> (rows, counts, hs): the indices of the
+    rows that shingle, their shingle counts, and the flat h values in
+    row order. Value-identical to hash31 over word_3gram_shingles: the
+    same UTF-8 bytes into the same md5, the same first-15-hex-digit
+    integer, the same % 2^31-1; rows are skipped like the JVM filter
+    size(split(text, ' ')) >= 3 (null text has size -1)."""
+
+    def shingle(texts):
+        import hashlib
+
+        md5 = hashlib.md5
+        join = " ".join
+        rows: list = []
+        counts: list = []
+        hs: list = []
+        for i, s in enumerate(texts):
+            if s is None:
+                continue
+            w = s.split(" ")
+            n = len(w) - 2
+            if n <= 0:
+                continue
+            rows.append(i)
+            counts.append(n)
+            hs.extend(
+                int(md5(join(w[j:j + 3]).encode()).hexdigest()[:15], 16)
+                % 2147483647
+                for j in range(n)
+            )
+        return rows, counts, hs
+
+    return shingle
 
 
 def _shingle_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, h) — one row per word-3gram shingle, h ∈ [0, 2^31-1).
 
-    r14 (guide §4.2): the hot form is an Arrow `mapInPandas` kernel —
-    Python's C md5 + str.split measure ~14x less CPU per shingle than
-    the codegen split/slice/concat_ws/md5/conv chain (2.4 us vs ~34 us
-    at sf0.1). Value-identical by construction: same UTF-8 bytes into
-    the same md5, same first-15-hex-digits integer, same % 2^31-1
-    (locked bit-for-bit by tests/test_round14_arrow_shingle.py);
-    row-skipping matches the JVM filter (size(split(text,' ')) >= 3,
-    with null text yielding size -1 and dropping)."""
-    if _arrow_shingle_ok(docs):
-        inp = docs.select("doc_id", "text")
+    Arrow tier (see _shingle_tier): a mapInArrow kernel — Python's C md5
+    + str.split cost ~14x less CPU per shingle than the codegen chain
+    (2.4 us vs ~34 us at sf0.1). doc_id passes through as an Arrow
+    `take`, so int64 ids and nulls stay exact. Locked bit-for-bit
+    against the JVM tier by tests/test_round14_arrow_shingle.py."""
+    if _shingle_tier(docs)[0] == "arrow":
+        shingle = _md5_shingler()
 
         def gen(batches):
-            import hashlib
-
             import numpy as _np
-            import pandas as _pd
+            import pyarrow as _pa
 
-            md5 = hashlib.md5
-            p = 2147483647
-            for pdf in batches:
-                ids: list = []
-                hs: list = []
-                for did, s in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
-                    if s is None:
-                        continue
-                    w = s.split(" ")
-                    n = len(w) - 2
-                    if n <= 0:
-                        continue
-                    ids.extend([did] * n)
-                    join = " ".join
-                    hs.extend(
-                        int(md5(join(w[j:j + 3]).encode()).hexdigest()[:15], 16) % p
-                        for j in range(n)
-                    )
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": _np.asarray(ids, dtype=_np.int64),
-                        "h": _np.asarray(hs, dtype=_np.int64),
-                    }
+            for rb in batches:
+                rows, counts, hs = shingle(rb.column(1).to_pylist())
+                take = _pa.array(_np.repeat(_np.array(rows, _np.int64), counts))
+                yield _pa.RecordBatch.from_arrays(
+                    [rb.column(0).take(take), _pa.array(hs, _pa.int64())],
+                    names=["doc_id", "h"],
                 )
 
-        return inp.mapInPandas(gen, "doc_id long, h long")
+        return docs.select("doc_id", "text").mapInArrow(gen, "doc_id long, h long")
     eligible = docs.filter(F.size(F.split(F.col("text"), " ")) >= 3)
     return (
         eligible.select("doc_id", F.explode(word_3gram_shingles("text")).alias("shingle"))
@@ -153,66 +157,48 @@ def minhash_signatures(docs: DataFrame, keep: tuple = ()) -> DataFrame:
     `keep` passes extra columns through the projection (e.g. the event
     time for the streaming candidate gate) without a re-join.
 
-    r14 (guide §4.2): the hot form is an Arrow `mapInPandas` kernel —
-    md5-shingling in C-speed Python (see _shingle_frame) and the k=8
-    permutations as numpy int64 passes over the batch's flattened
-    shingle array with per-doc `minimum.reduceat` segments. Integer
-    arithmetic is exact and identical in both engines (a·h+b < 2^63);
-    locked bit-for-bit by tests/test_round14_arrow_shingle.py."""
-    if _arrow_shingle_ok(docs):
-        inp = fan_out(docs).select("doc_id", *keep, "text")
-        pass_fields = [inp.schema[c] for c in ("doc_id", *keep)]
+    Arrow tier (see _shingle_tier): a mapInArrow kernel — the shared
+    md5 shingler, then the k=8 permutations as numpy int64 passes over
+    the batch's flat shingle array with per-doc `minimum.reduceat`
+    segments. Integer arithmetic is exact and identical in both engines
+    (a·h+b < 2^63); doc_id and `keep` pass through as Arrow `take`s, so
+    their values and nulls stay exact. Locked bit-for-bit against the
+    JVM tier by tests/test_round14_arrow_shingle.py."""
+    inp = fan_out(docs).select("doc_id", *keep, "text")
+    if _shingle_tier(docs)[0] == "arrow":
         from pyspark.sql.types import LongType, StructField, StructType
 
-        out_schema = StructType(
-            pass_fields
-            + [StructField(f"sig_{i}", LongType()) for i in range(len(MINHASH_A))]
-        )
         pass_cols = ["doc_id", *keep]
-        a_consts = list(MINHASH_A)
-        b_consts = list(MINHASH_B)
+        sig_cols = [f"sig_{i}" for i in range(len(MINHASH_A))]
+        out_schema = StructType(
+            [inp.schema[c] for c in pass_cols]
+            + [StructField(c, LongType()) for c in sig_cols]
+        )
+        names = pass_cols + sig_cols
+        n_pass = len(pass_cols)
+        perms = list(zip(MINHASH_A, MINHASH_B))
+        shingle = _md5_shingler()
 
         def gen(batches):
-            import hashlib
-
             import numpy as _np
+            import pyarrow as _pa
 
-            md5 = hashlib.md5
-            p = 2147483647
-            for pdf in batches:
-                flat: list = []
-                counts: list = []
-                mask = _np.zeros(len(pdf), dtype=bool)
-                for i, s in enumerate(pdf["text"]):
-                    if s is None:
-                        continue
-                    w = s.split(" ")
-                    n = len(w) - 2
-                    if n <= 0:
-                        continue
-                    mask[i] = True
-                    counts.append(n)
-                    join = " ".join
-                    flat.extend(
-                        int(md5(join(w[j:j + 3]).encode()).hexdigest()[:15], 16) % p
-                        for j in range(n)
+            for rb in batches:
+                rows, counts, hs = shingle(rb.column(n_pass).to_pylist())
+                take = _pa.array(rows, _pa.int64())
+                cols = [rb.column(i).take(take) for i in range(n_pass)]
+                h = _np.asarray(hs, dtype=_np.int64)
+                starts = _np.cumsum([0] + counts[:-1], dtype=_np.int64)
+                for a, b in perms:
+                    v = (a * h + b) % 2147483647
+                    cols.append(
+                        _pa.array(_np.minimum.reduceat(v, starts) if rows
+                                  else _np.empty(0, _np.int64))
                     )
-                out = pdf.loc[mask, pass_cols].reset_index(drop=True)
-                arr = _np.asarray(flat, dtype=_np.int64)
-                starts = _np.zeros(len(counts), dtype=_np.int64)
-                if len(counts) > 1:
-                    starts[1:] = _np.cumsum(counts[:-1])
-                for i, (a, b) in enumerate(zip(a_consts, b_consts)):
-                    v = (a * arr + b) % p
-                    out[f"sig_{i}"] = (
-                        _np.minimum.reduceat(v, starts)
-                        if len(counts)
-                        else _np.empty(0, dtype=_np.int64)
-                    )
-                yield out
+                yield _pa.RecordBatch.from_arrays(cols, names=names)
 
-        return inp.mapInPandas(gen, out_schema)
-    eligible = fan_out(docs).filter(F.size(F.split(F.col("text"), " ")) >= 3)
+        return inp.mapInArrow(gen, out_schema)
+    eligible = inp.filter(F.size(F.split(F.col("text"), " ")) >= 3)
     hashed = eligible.select(
         "doc_id", *keep, F.transform(word_3gram_shingles("text"), hash31).alias("hs")
     )
@@ -395,11 +381,12 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     of matching signature components.
 
     The banded frame is one posexplode over an array of band keys (not a
-    4-way union, which re-executed the signature pipeline per band), and
-    the self-join's two sides are identical subtrees shuffled on the same
-    (band, band_key) key, so Spark's ReuseExchange computes the banded
-    frame once. Net: the first and only fact-scale work before the
-    candidate join is the parquet scan itself."""
+    4-way union, which re-executed the signature pipeline per band). The
+    executed self-join is a BroadcastHashJoin on (band, band_key), and
+    the signature pipeline runs on BOTH sides: only fan_out's round-robin
+    exchange of the (doc_id, text) scan is reused between them. Forcing
+    one computation with a (band, band_key) repartition measured no gain
+    at sf0.01 — the extra exchange stage costs about what it saves."""
     pairs = _pairs_from_banded(lsh_banded(docs), with_sig_match=True)
     return pairs.select(
         "doc_a",

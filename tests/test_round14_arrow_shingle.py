@@ -1,9 +1,9 @@
-"""Round-14 Arrow shingler locks: the mapInPandas md5-shingle kernels
+"""Arrow shingler locks: the mapInArrow md5-shingle kernels
 (operators/dedup._shingle_frame / minhash_signatures) must stay
 bit-identical to the JVM codegen chain at every driver-verified scale —
 same UTF-8 bytes into the same md5, same first-15-hex integer, same
 % 2^31-1, same exact int64 permutation arithmetic, same >=3-token
-row-skipping."""
+row-skipping, and exact doc_id / pass-through values, nulls included."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -17,14 +17,17 @@ def _docs(spark, sf):
 
 
 def _both(monkeypatch, build):
-    # "1" forces the Arrow tier regardless of the size-adaptive gate
-    # (test corpora sit below the 32 MB crossover by design)
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "1")
+    # the Arrow tier is the default; "0" is the JVM kill-switch
+    monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
     arrow = build()
     monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "0")
     jvm = build()
     monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
     return arrow, jvm
+
+
+def _plan(df):
+    return df._jdf.queryExecution().toString()
 
 
 def _bitcompare(a_df, b_df, key):
@@ -41,11 +44,17 @@ def _bitcompare(a_df, b_df, key):
             assert (av == bv).all(), c
 
 
+def _exact_rows(df):
+    # row tuples straight from Spark: no pandas float64 round trip, so
+    # an int64 off by one or a null turned NaN shows
+    return sorted(df.collect(), key=lambda r: tuple((v is None, v) for v in r))
+
+
 def test_shingle_frame_matches_jvm(spark, sf_dir, monkeypatch):
     arrow, jvm = _both(
         monkeypatch, lambda: dedup_op._shingle_frame(_docs(spark, sf_dir))
     )
-    assert "MapInPandas" in arrow._jdf.queryExecution().toString()
+    assert "MapInArrow" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_id", "h"])
 
 
@@ -54,7 +63,7 @@ def test_minhash_signatures_match_jvm(spark, sf_dir, monkeypatch):
         monkeypatch,
         lambda: dedup_op.minhash_signatures(_docs(spark, sf_dir), keep=("lang",)),
     )
-    assert "MapInPandas" in arrow._jdf.queryExecution().toString()
+    assert "MapInArrow" in _plan(arrow)
     _bitcompare(arrow, jvm, ["doc_id"])
 
 
@@ -68,25 +77,49 @@ def test_lsh_pairs_end_to_end_match(spark, sf_dir, monkeypatch):
     _bitcompare(arrow, jvm, ["doc_a", "doc_b"])
 
 
-def test_shingle_gates(spark, sf_dir, monkeypatch):
+def test_shingle_gates(spark, sf_dir, monkeypatch, tmp_path):
+    """One dispatch point: the Arrow tier by default at any corpus size,
+    the JVM tier for the kill-switch, non-contract dtypes and streaming
+    frames."""
     docs = _docs(spark, sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
+    assert dedup_op._shingle_tier(docs)[0] == "arrow"
+    assert "MapInArrow" in _plan(dedup_op._shingle_frame(docs))
+    assert "MapInArrow" in _plan(dedup_op.minhash_signatures(docs))
+    # non-contract frame (doc_id not bigint)
+    other = docs.withColumn("doc_id", F.col("doc_id").cast("int"))
+    assert dedup_op._shingle_tier(other) == ("jvm", "doc_id int, text string")
+    assert "MapInArrow" not in _plan(dedup_op._shingle_frame(other))
+    # streaming frame, checked explicitly (not by its missing input files)
+    stream = spark.readStream.schema(docs.schema).parquet(str(tmp_path))
+    assert dedup_op._shingle_tier(stream) == ("jvm", "streaming frame")
+    assert "MapInArrow" not in _plan(dedup_op.minhash_signatures(stream))
     # kill-switch restores the pure-JVM plan
     monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "0")
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    # non-contract frame (doc_id not bigint) falls back even when forced
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE", "1")
-    other = docs.withColumn("doc_id", F.col("doc_id").cast("int"))
-    plan = dedup_op._shingle_frame(other)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_SHINGLE", raising=False)
-    # size-adaptive default: the tiny test corpus stays JVM, a low
-    # crossover flips it to the Arrow tier (the sf10 regime)
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" not in plan
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_SHINGLE_MIN_MB", "0")
-    plan = dedup_op._shingle_frame(docs)._jdf.queryExecution().toString()
-    assert "MapInPandas" in plan
+    assert dedup_op._shingle_tier(docs)[0] == "jvm"
+    assert "MapInArrow" not in _plan(dedup_op._shingle_frame(docs))
+    assert "MapInArrow" not in _plan(dedup_op.minhash_signatures(docs))
+
+
+def test_exact_doc_id_and_keep_through_kernels(spark, monkeypatch):
+    """A null doc_id and one above 2^53 in the same batch: both kernels
+    return the JVM tier's exact ids and keep the null row (a pandas
+    batch casts the null to NaN and rounds 2^60+1 through float64)."""
+    docs = spark.createDataFrame(
+        [(None, "a b c d", "en"), (2**60 + 1, "x y z w", None), (3, "p q r", "de")],
+        "doc_id long, text string, lang string",
+    ).coalesce(1)
+    arrow, jvm = _both(monkeypatch, lambda: dedup_op._shingle_frame(docs))
+    assert "MapInArrow" in _plan(arrow)
+    assert _exact_rows(arrow) == _exact_rows(jvm)
+    arrow, jvm = _both(
+        monkeypatch, lambda: dedup_op.minhash_signatures(docs, keep=("lang",))
+    )
+    assert "MapInArrow" in _plan(arrow)
+    assert arrow.schema == jvm.schema
+    got = _exact_rows(arrow)
+    assert got == _exact_rows(jvm)
+    assert [(r.doc_id, r.lang) for r in got] == [(3, "de"), (2**60 + 1, None), (None, "en")]
 
 
 def test_short_and_null_docs_skip_like_jvm(spark, monkeypatch):
@@ -105,8 +138,14 @@ def test_short_and_null_docs_skip_like_jvm(spark, monkeypatch):
     ) == [2, 5]
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("sf", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"])
+@pytest.mark.parametrize(
+    "sf",
+    [
+        # the default tier at a driver scale: in the default selection
+        "/root/testdata/sf0.01",
+        pytest.param("/root/testdata/sf0.1", marks=pytest.mark.slow),
+    ],
+)
 def test_shingle_matches_jvm_driver_scales(spark, monkeypatch, sf):
     arrow, jvm = _both(
         monkeypatch, lambda: dedup_op._shingle_frame(_docs(spark, sf))
